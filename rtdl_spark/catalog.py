@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -90,27 +91,54 @@ def register_lake_table(
     table_name: str,
     location: str,
     fmt: str = "parquet",
+    partitions: list[dict[str, str]] | None = None,
 ) -> None:
     """Spark-native equivalent of rtdl's Dremio dataset promotion
     (reference ingester/ingester.go:944-988): make a written dataset
     queryable by name via the session catalog. Idempotent. Identifiers are
     sanitized (the session catalog only allows [A-Za-z0-9_], stricter than
     Dremio's source names — e.g. stream type 'test-msg' → 'test_msg').
+
+    Hive-style partition directories under the location are invisible to
+    the catalog until registered. A new table recovers every partition at
+    its location (``MSCK REPAIR TABLE``). For an existing one, a caller
+    that just wrote data passes ``partitions`` — ``[{column: value}]``,
+    one dict per partition written — and exactly those are added by one
+    ``ALTER TABLE … ADD IF NOT EXISTS``, so a registration costs
+    O(partitions written) instead of a listing of the whole table;
+    without them (or with a NULL value) the repair runs again.
     """
     db = sanitize_identifier(database)
     tbl = sanitize_identifier(table_name)
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS `{db}`.`{tbl}` "
-        f"USING {fmt} LOCATION '{location}'"
-    )
-    # Hive-style partition dirs under the location are invisible to the
-    # catalog until recovered; every (re-)registration after an append picks
-    # up new partitions. No-op for unpartitioned layouts.
+    name = f"`{db}`.`{tbl}`"
+    exists = spark.catalog.tableExists(name)
+    if not exists:
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {name} "
+            f"USING {fmt} LOCATION '{location}'"
+        )
+    if exists and partitions and all(
+        v is not None for p in partitions for v in p.values()
+    ):
+        specs = " ".join(
+            "PARTITION ("
+            + ", ".join(
+                f"`{k}` = '{_sql_string(v)}'" for k, v in p.items()
+            )
+            + ")"
+            for p in partitions
+        )
+        spark.sql(f"ALTER TABLE {name} ADD IF NOT EXISTS {specs}")
+        return
     try:
-        spark.sql(f"MSCK REPAIR TABLE `{db}`.`{tbl}`")
-    except Exception:
-        pass
+        spark.sql(f"MSCK REPAIR TABLE {name}")
+    except AnalysisException:
+        pass  # an unpartitioned layout has nothing to recover
+
+
+def _sql_string(value: str) -> str:
+    return value.replace("\\", "\\\\").replace("'", "\\'")
 
 
 def sanitize_identifier(identifier: str) -> str:

@@ -23,12 +23,15 @@ Spark redesign decisions (each a deliberate divergence, not an omission):
   over stream_id (ingest-service.go:216-243); unmatched rows are dropped
   silently (same semantics, ingester.go:1592).
 - **Catalog**: Dremio source/dataset promotion (A19) becomes
-  CREATE DATABASE/TABLE IF NOT EXISTS against the Spark session catalog.
+  CREATE DATABASE/TABLE IF NOT EXISTS against the Spark session catalog:
+  one table per message-type folder (``<dest>/rtdl_table=<type>``,
+  partitioned by rtdl_bucket), as the reference promotes each folder.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +53,35 @@ from rtdl_spark.session import ensure_runtime_confs
 TABLE_COL = "rtdl_table"
 BUCKET_COL = "rtdl_bucket"
 CORRUPT_COL = "_corrupt_record"
+
+
+# Spark's partition-path escaping (ExternalCatalogUtils.escapePathName):
+# these characters are written as %XX in a partition directory's name,
+# and a NULL or empty value as Hive's default partition.
+_PATH_ESCAPES = frozenset(
+    [chr(c) for c in range(1, 0x20)] + list('"#%\'*/:=?\\\x7f{[]^')
+)
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def partition_dir_name(col: str, value: str | None) -> str:
+    """The directory name Spark's partitioned writer gives ``col=value``
+    (``rtdl_table=test-msg``, ``rtdl_bucket=2024-02-15``); NULL and ''
+    land in Hive's default partition."""
+    if not value:
+        return f"{col}={_NULL_PARTITION}"
+    esc = "".join(
+        f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in value
+    )
+    return f"{col}={esc}"
+
+
+def unescape_partition_value(name: str) -> str | None:
+    """The value behind one ``partition_dir_name`` value (None for the
+    default partition)."""
+    if name == _NULL_PARTITION:
+        return None
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m[1], 16)), name)
 
 
 def _col_or_null(df: DataFrame, name: str):
@@ -256,25 +288,52 @@ class IngestJob:
         return f"{prefix}{cfg.bucket_name}/{cfg.folder_name}"
 
     # -- A11 + A19: write + catalog ---------------------------------------
-    def write_stream_batch(self, cfg: StreamConfig, df: DataFrame) -> str:
+    def write_stream_batch(
+        self, cfg: StreamConfig, df: DataFrame, count_rows: bool = False
+    ) -> tuple[str, int | None]:
         """Partitioned columnar append: one write per (table, bucket)
-        partition — the micro-batch replacement for file-per-message."""
+        partition — the micro-batch replacement for file-per-message.
+        Returns (destination root, rows written when ``count_rows``).
+
+        The partitions written — and the row count — ride the write
+        itself as one Observation, so catalog registration needs no
+        second pass over the batch and adds exactly those partitions to
+        each message type's table."""
+        from pyspark.sql import Observation
+
         codec = COMPRESSION_TYPES[cfg.compression_type_id]
         dest = self.dest_root(cfg)
+        metrics = []
+        if self.register_catalog:
+            metrics.append(
+                F.collect_set(F.struct(TABLE_COL, BUCKET_COL)).alias("parts")
+            )
+        if count_rows:
+            metrics.append(F.count(F.lit(1)).alias("n_rows"))
+        obs = Observation() if metrics else None
+        if obs is not None:
+            df = df.observe(obs, *metrics)
         (
             df.write.partitionBy(TABLE_COL, BUCKET_COL)
             .option("compression", codec)
             .mode("append")
             .parquet(dest)
         )
+        seen = obs.get if obs is not None else {}
         if self.register_catalog:
             db = cfg.folder_name or f"s_{cfg.stream_id}"
-            tables = [
-                r[0] for r in df.select(TABLE_COL).distinct().collect()
-            ]
-            for t in tables:
-                register_lake_table(self.spark, db, t, dest)
-        return dest
+            buckets: dict[str, list] = {}
+            for table, bucket in seen["parts"]:
+                buckets.setdefault(table, []).append(bucket)
+            for table, bs in buckets.items():
+                register_lake_table(
+                    self.spark,
+                    db,
+                    table,
+                    f"{dest.rstrip('/')}/{partition_dir_name(TABLE_COL, table)}",
+                    partitions=[{BUCKET_COL: b} for b in sorted(bs, key=str)],
+                )
+        return dest, seen.get("n_rows")
 
     # -- A22/A23: function chain ------------------------------------------
     def apply_chain(self, cfg: StreamConfig, df: DataFrame) -> DataFrame:
@@ -340,8 +399,6 @@ class IngestJob:
         per-stream counts ride the write action itself via df.observe —
         no extra pass; the input/control counts are reads of the cached
         envelope frame."""
-        from pyspark.sql import Observation
-
         from rtdl_spark.functions.smallplan import (
             _plan_size_estimate,
             _small_plan_scope,
@@ -429,17 +486,12 @@ class IngestJob:
                 with _small_plan_scope(self.spark, batch_small_bytes):
                     if may_empty and chained.limit(1).count() == 0:
                         continue
-                    obs = None
-                    if collect_metrics:
-                        obs = Observation()
-                        chained = chained.observe(
-                            obs, F.count(F.lit(1)).alias("n_rows")
-                        )
-                    written[cfg.stream_id] = self.write_stream_batch(
-                        cfg, chained
+                    dest, n_rows = self.write_stream_batch(
+                        cfg, chained, count_rows=collect_metrics
                     )
-                if obs is not None:
-                    stream_counts[cfg.stream_id] = obs.get["n_rows"]
+                written[cfg.stream_id] = dest
+                if collect_metrics:
+                    stream_counts[cfg.stream_id] = n_rows
             if collect_metrics:
                 self.last_metrics = {
                     "n_input": n_input,

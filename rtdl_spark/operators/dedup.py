@@ -350,7 +350,8 @@ def ml_minhash_lsh_pairs(
     ml's OR-amplification across ``num_hash_tables``. Deterministic given
     ``seed`` but NOT reproducible outside Spark (ml's internal hashing) —
     hence the hand-rolled integer version above is the oracle-checked one,
-    and this one is validated by recall against it (tests/test_dedup_ml.py).
+    and this one is validated by recall against it
+    (tests/test_lake_ops.py::test_ml_minhash_recall_vs_exact).
 
     Returns (id1, id2, jaccard_distance) with id1 < id2.
     """

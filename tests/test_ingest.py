@@ -94,6 +94,80 @@ def test_canonical_message_end_to_end(spark, registry, tmp_path):
     assert n[0]["n"] == 1
 
 
+def test_catalog_table_per_message_type(spark, tmp_path, monkeypatch):
+    """Each message type's catalog table sits at its own folder
+    (<dest>/rtdl_table=<type>, partitioned by rtdl_bucket) and holds only
+    its own rows. A later batch registers the partitions it wrote —
+    taken from the write itself — with ALTER TABLE ADD, not a repair
+    that lists the whole table."""
+    registry = StreamRegistry(str(tmp_path / "configs"))
+    registry.create(
+        StreamConfig(
+            stream_id=STREAM_ID,
+            message_type="test-msg",
+            file_store_type_id=1,
+            folder_name="typeFolder",
+            partition_time_id=2,
+            functions="ingester",
+        )
+    )
+    events = [
+        {"stream_id": STREAM_ID, "type": "click", "n": i} for i in range(3)
+    ] + [{"stream_id": STREAM_ID, "n": 10 + i} for i in range(2)]
+    job = make_job(spark, registry, tmp_path)
+    job.ingest_json_dir(write_events(tmp_path, events, "b1"))
+
+    def counts(tbl):
+        return {
+            r["rtdl_bucket"]: r["c"]
+            for r in spark.sql(
+                f"SELECT rtdl_bucket, count(*) AS c FROM typeFolder.{tbl} "
+                "GROUP BY rtdl_bucket"
+            ).collect()
+        }
+
+    assert counts("click") == {"2024-02-15": 3}
+    assert counts("test_msg") == {"2024-02-15": 2}
+    assert spark.sql("SELECT sum(n) AS s FROM typeFolder.click").first()["s"] == 3
+    desc = spark.sql("DESCRIBE TABLE typeFolder.test_msg").collect()
+    assert [r["col_name"] for r in desc].count("rtdl_bucket") == 2  # partition col
+    assert "rtdl_table" not in [r["col_name"] for r in desc]
+
+    statements = []
+    real_sql = spark.sql
+    monkeypatch.setattr(
+        spark, "sql", lambda q, *a, **k: statements.append(q) or real_sql(q, *a, **k)
+    )
+    job2 = make_job(spark, registry, tmp_path, fixed_time="2024-02-16 08:00:00")
+    job2.ingest_json_dir(write_events(tmp_path, events[:1], "b2"))
+    monkeypatch.undo()
+    assert counts("click") == {"2024-02-15": 3, "2024-02-16": 1}
+    assert not any("MSCK" in q for q in statements), statements
+    assert any(
+        "ADD IF NOT EXISTS" in q and "2024-02-16" in q for q in statements
+    ), statements
+
+
+def test_partition_dir_name_matches_spark_escaping(spark):
+    """partition_dir_name reproduces Spark's partition-path escaping
+    character for character, and unescape_partition_value inverts it."""
+    from rtdl_spark.ingest.pipeline import (
+        partition_dir_name,
+        unescape_partition_value,
+    )
+
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    values = [chr(c) for c in range(1, 256)] + [
+        "test-msg", "2024-02-15-10", "a b:c/d%e=f", "007", "é✓",
+    ]
+    for v in values:
+        want = f"c={utils.escapePathName(v)}"
+        assert partition_dir_name("c", v) == want, repr(v)
+        assert unescape_partition_value(want[2:]) == v, repr(v)
+    assert partition_dir_name("c", None) == "c=__HIVE_DEFAULT_PARTITION__"
+    assert unescape_partition_value("__HIVE_DEFAULT_PARTITION__") is None
+
+
 def test_schema_inference_drops_null_and_empties(spark, registry, tmp_path):
     """A8 parity (ingester.go:462-476,487): null fields, empty objects and
     empty arrays are dropped from the inferred schema; 'd' survives."""
@@ -632,28 +706,37 @@ def test_ingest_json_dir_idempotent_on_batch_replay(spark, sf_dir, tmp_path):
     assert job.read_table(cfg, "events").count() == 40
 
 
-def test_metadata_compaction_selection_matches_walk(spark, sf_dir, tmp_path):
+def test_metadata_compaction_selection_matches_walk(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """The _metadata-based partition stats agree with the os.walk stats
-    on file counts and bytes, and metadata-selected compaction rewrites
-    the same partitions to the same file counts."""
+    on file counts and bytes, and compaction selects by store: the walk
+    on a local root, the _metadata scan otherwise (forced here by
+    treating the local root as remote) — both rewrite the same
+    partitions to the same file counts."""
     from pyspark.sql import functions as F
 
+    from rtdl_spark.ingest import compact
     from rtdl_spark.ingest.compact import (
         compact_lake,
         partition_file_stats,
         partition_file_stats_metadata,
     )
     from rtdl_spark.ingest.pipeline import BUCKET_COL, TABLE_COL
+    from rtdl_spark.sources import fsutil
 
-    root = str(tmp_path / "clake")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    (
-        docs.withColumn(TABLE_COL, F.lit("docs"))
-        .withColumn(BUCKET_COL, (F.col("doc_id") % 2).cast("string"))
-        .repartition(12)
-        .write.partitionBy(TABLE_COL, BUCKET_COL)
-        .parquet(root)
-    )
+    roots = {}
+    for branch in ("walk", "metadata"):
+        root = roots[branch] = str(tmp_path / f"clake_{branch}")
+        (
+            docs.withColumn(TABLE_COL, F.lit("docs"))
+            .withColumn(BUCKET_COL, (F.col("doc_id") % 2).cast("string"))
+            .repartition(12)
+            .write.partitionBy(TABLE_COL, BUCKET_COL)
+            .parquet(root)
+        )
+    root = roots["walk"]
     walk = {(s["table"], s["bucket"]): s for s in partition_file_stats(spark, root)}
     meta = {(s["table"], s["bucket"]): s
             for s in partition_file_stats_metadata(spark, root)}
@@ -662,13 +745,26 @@ def test_metadata_compaction_selection_matches_walk(spark, sf_dir, tmp_path):
         assert walk[k]["n_files"] == meta[k]["n_files"]
         assert walk[k]["bytes"] == meta[k]["bytes"]
 
-    done = compact_lake(spark, root, min_files=2, use_metadata=True)
-    assert set(done) == set(walk)
-    assert all(n == 1 for n in done.values())  # tiny partitions -> 1 file
-    after = {(s["table"], s["bucket"]): s["n_files"]
-             for s in partition_file_stats_metadata(spark, root)}
-    assert all(v == 1 for v in after.values())
-    assert spark.read.parquet(root).count() == docs.count()
+    used = []
+    for name in ("partition_file_stats", "partition_file_stats_metadata"):
+        fn = getattr(compact, name)
+        monkeypatch.setattr(
+            compact, name,
+            lambda *a, _fn=fn, _name=name: used.append(_name) or _fn(*a),
+        )
+    done = {"walk": compact_lake(spark, roots["walk"], min_files=2)}
+    with monkeypatch.context() as m:
+        m.setattr(fsutil, "_is_local", lambda _s, _p: False)
+        done["metadata"] = compact_lake(spark, roots["metadata"], min_files=2)
+    assert used == ["partition_file_stats", "partition_file_stats_metadata"]
+    for branch, root in roots.items():
+        assert set(done[branch]) == set(walk)
+        # tiny partitions -> 1 file
+        assert all(n == 1 for n in done[branch].values())
+        after = {(s["table"], s["bucket"]): s["n_files"]
+                 for s in partition_file_stats_metadata(spark, root)}
+        assert all(v == 1 for v in after.values())
+        assert spark.read.parquet(root).count() == docs.count()
 
 
 def test_dest_root_uri_dispatch_all_store_types(spark, tmp_path):

@@ -112,6 +112,154 @@ def test_compaction(spark, tmp_path):
     assert spark.read.parquet(root).count() == 5000
 
 
+def _partition_files(root):
+    """{relative partition dir: parquet file count} under root, hidden
+    directories included."""
+    import os
+
+    out = {}
+    for dp, _, fs in os.walk(root):
+        n = sum(f.endswith(".parquet") for f in fs)
+        if n:
+            out[os.path.relpath(dp, root)] = n
+    return out
+
+
+def test_compaction_drift_sizes_and_partition_names(spark, tmp_path):
+    """One compaction over partitions that (a) drifted — files [a],
+    [a, opt_0], [a, opt_0, opt_1] — with no session mergeSchema: every
+    opt_* value survives; (b) are larger than target_file_bytes: they end
+    with ceil(bytes/target) files; (c) carry values an inferring reader
+    would retype ('007', '2024-01-01'): the directory names survive byte
+    for byte, even with partition type inference on."""
+    import math
+    import os
+
+    from rtdl_spark.ingest.compact import compact_lake, partition_file_stats
+    from rtdl_spark.ingest.pipeline import BUCKET_COL, TABLE_COL
+
+    root = str(tmp_path / "lake")
+
+    def land(df, table, bucket, n_files=1):
+        (
+            df.withColumn(TABLE_COL, F.lit(table))
+            .withColumn(BUCKET_COL, F.lit(bucket))
+            .repartition(n_files)
+            .write.partitionBy(TABLE_COL, BUCKET_COL)
+            .mode("append")
+            .parquet(root)
+        )
+
+    base = spark.range(10).select(F.col("id").alias("a"))
+    drifted = [
+        base,
+        base.withColumn("opt_0", F.col("a") * 10),
+        base.withColumn("opt_0", F.col("a") * 10).withColumn(
+            "opt_1", F.concat(F.lit("v"), F.col("a").cast("string"))
+        ),
+    ]
+    drift_dir = os.path.join(root, "rtdl_table=drift", "rtdl_bucket=007")
+    for i, df in enumerate(drifted):
+        land(df, "drift", "007")
+        # name the files in landing order: a reader that takes one
+        # file's schema then sees the narrowest file first
+        for f in os.listdir(drift_dir):
+            if f.startswith("part-"):
+                os.rename(
+                    os.path.join(drift_dir, f), os.path.join(drift_dir, f"{i}-{f}")
+                )
+    big = spark.range(20000).select(
+        F.col("id").alias("a"), F.sha2(F.col("id").cast("string"), 256).alias("h")
+    )
+    land(big, "big", "2024-01-01", n_files=6)
+    before = _partition_files(root)
+    assert before == {
+        "rtdl_table=drift/rtdl_bucket=007": 3,
+        "rtdl_table=big/rtdl_bucket=2024-01-01": 6,
+    }
+    stats = {(s["table"], s["bucket"]): s for s in partition_file_stats(spark, root)}
+    target = stats[("big", "2024-01-01")]["bytes"] // 3 + 1
+    want_big = math.ceil(stats[("big", "2024-01-01")]["bytes"] / target)
+    assert want_big >= 2
+
+    assert spark.conf.get("spark.sql.parquet.mergeSchema") == "false"
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        done = compact_lake(spark, root, min_files=2, target_file_bytes=target)
+    finally:
+        spark.conf.set(key, prev)
+
+    assert done == {("drift", "007"): 1, ("big", "2024-01-01"): want_big}
+    assert _partition_files(root) == {
+        "rtdl_table=drift/rtdl_bucket=007": 1,
+        "rtdl_table=big/rtdl_bucket=2024-01-01": want_big,
+    }
+    merged = spark.read.option("mergeSchema", "true").parquet(root)
+    drift = merged.filter(F.col(TABLE_COL) == "drift")
+    got = drift.agg(
+        F.count("a").alias("a"),
+        F.count("opt_0").alias("opt_0"),
+        F.count("opt_1").alias("opt_1"),
+        F.sum("opt_0").alias("s0"),
+    ).first()
+    assert (got["a"], got["opt_0"], got["opt_1"], got["s0"]) == (30, 20, 10, 900)
+    assert {r["opt_1"] for r in drift.filter(F.col("opt_1").isNotNull())
+            .select("opt_1").collect()} == {f"v{i}" for i in range(10)}
+    bigr = merged.filter(F.col(TABLE_COL) == "big").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("a").alias("s")
+    ).first()
+    assert (bigr["n"], bigr["s"]) == (20000, sum(range(20000)))
+
+
+def test_compaction_failed_swap_never_loses_a_partition(
+    spark, tmp_path, monkeypatch
+):
+    """Fault injection: the k-th rename of the swap fails (move aside,
+    promote, or either step of the second partition). The error
+    surfaces, every row stays readable from the lake root, and no
+    staging directory is left behind."""
+    import os
+
+    import pytest
+
+    from rtdl_spark.ingest.compact import compact_lake
+    from rtdl_spark.ingest.pipeline import BUCKET_COL, TABLE_COL
+    from rtdl_spark.sources import fsutil
+
+    real_rename = fsutil.rename
+    expect = sorted(
+        (i, f"t{i % 2}") for _ in range(3) for i in range(40)
+    )
+    for k in (1, 2, 3, 4):
+        root = str(tmp_path / f"lake_{k}")
+        for _ in range(3):
+            spark.range(40).withColumn(
+                TABLE_COL, F.concat(F.lit("t"), (F.col("id") % 2).cast("string"))
+            ).withColumn(BUCKET_COL, F.lit("2024-01-01")).repartition(1).write.partitionBy(
+                TABLE_COL, BUCKET_COL
+            ).mode("append").parquet(root)
+        calls = []
+
+        def failing(spark_, src, dst, _k=k):
+            calls.append((src, dst))
+            if len(calls) == _k:
+                return False
+            return real_rename(spark_, src, dst)
+
+        monkeypatch.setattr(fsutil, "rename", failing)
+        with pytest.raises(OSError, match="compaction"):
+            compact_lake(spark, root, min_files=2)
+        monkeypatch.setattr(fsutil, "rename", real_rename)
+        got = sorted(
+            (r["id"], r[TABLE_COL])
+            for r in spark.read.parquet(root).collect()
+        )
+        assert got == expect, k
+        assert not [d for d in os.listdir(root) if d.startswith("_compact")], k
+
+
 def test_ml_minhash_recall_vs_exact(spark, sf_dir):
     """ml MinHashLSH must recover the planted near-dup pairs the exact
     integer LSH finds (distance 0.5 ↔ jaccard 0.5 on token sets)."""
