@@ -145,22 +145,6 @@ def sanitize_identifier(identifier: str) -> str:
     return re.sub(r"[^A-Za-z0-9_]", "_", identifier)
 
 
-def register_versioned_view(
-    spark: SparkSession,
-    table_obj,
-    view_name: str,
-    as_of: int | None = None,
-) -> None:
-    """Expose a VersionedTable snapshot as a temp view so plain SQL users
-    query it like any catalog table (the Dremio-registration parity for
-    versioned data): ``register_versioned_view(spark, vt, "orders_v3",
-    as_of=3)`` then ``spark.sql("SELECT ... FROM orders_v3")``. The view
-    captures the version list at registration time — re-register after
-    new commits for a fresher snapshot (same semantics as a catalog
-    pointer update)."""
-    table_obj.snapshot(as_of=as_of).createOrReplaceTempView(view_name)
-
-
 def register_delta_view(
     spark: SparkSession,
     table_dir: str,

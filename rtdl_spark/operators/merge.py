@@ -253,7 +253,8 @@ def delete_by_keys(
 
     Returns {"files_scanned", "files_rewritten", "rows_deleted"}.
     Caveats: file-level atomicity only (readers can observe a partially
-    deleted table mid-run — front it with VersionedTable for snapshot
+    deleted table mid-run — keep the table in native Delta, whose
+    ``delete_where_delta_native`` commits atomically, for snapshot
     semantics); partition directory values are preserved because each
     surviving row is written back to its source file's directory.
     """

@@ -1405,7 +1405,7 @@ def read_table_changes_cdf(
             f"commit {min(missing)} (cleaned up) — change history for "
             "that range is gone"
         )
-    _, meta, _, _, _ = snapshot_actions(spark, root, int(ending_version))
+    _, meta, _, _ = snapshot_control(spark, root, int(ending_version))
     schema_json = json.loads(meta["schemaString"])
     schema = StructType.fromJson(schema_json)
     part_cols = list(meta.get("partitionColumns") or [])
@@ -1545,10 +1545,11 @@ def read_table_changes_cdf(
 
     # whether delta.enableChangeDataFeed was 'true' entering the range
     # (latest metaData <= want[0], including want[0]'s own metaData —
-    # updated per commit inside the loop before the derivation check)
+    # updated per commit inside the loop before the derivation check);
+    # only the refusal reads it, so allow_unrecorded skips the replay
     cdf_on = False
-    if want:
-        _, m0, _, _, _ = snapshot_actions(spark, root, want[0])
+    if want and not allow_unrecorded:
+        _, m0, _, _ = snapshot_control(spark, root, want[0])
         cdf_on = (m0.get("configuration") or {}).get(
             "delta.enableChangeDataFeed"
         ) == "true"

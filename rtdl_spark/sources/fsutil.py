@@ -112,21 +112,6 @@ def touch(spark: SparkSession, path: str) -> None:
     out.close()
 
 
-def touch_new(spark: SparkSession, path: str) -> None:
-    """Create an empty file, FAILING if it already exists (overwrite
-    False) — the compare-and-set primitive: on HDFS/local the create is
-    atomic, so two writers racing on the same marker get one winner and
-    one error instead of a silent clobber."""
-    if _is_local(spark, path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "xb"):
-            pass
-        return
-    fs, p = _fs_path(spark, path)
-    out = fs.create(p, False)
-    out.close()
-
-
 def rename(spark: SparkSession, src: str, dst: str) -> bool:
     """fs.rename — atomic on HDFS/local, copy-ish on object stores (use
     a metadata layer there for true swaps); returns success. Like

@@ -8,13 +8,20 @@ or memory pressure. Usage:
 
     python tools/soak.py [N]                      # default N=10 (~6M rows)
     python tools/soak.py 30 --only allpairs_gemm  # one cell at 30x
+
+Cells that time two variants of one operation report both under the
+cell's name with a suffix: ``delete_by_keys`` (``_clustered`` /
+``_scatter`` key layouts) and ``matview_refresh`` (``_incremental`` /
+``_rebuild`` over one Delta source).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -221,9 +228,6 @@ def main() -> None:
         .filter(F.col("id") % 1000 != 999)
         .select(F.col("id").alias("id1"), (F.col("id") + 1).alias("id2"))
     )
-    import shutil
-    import tempfile
-
     cc_dir = tempfile.mkdtemp(prefix="cc_soak_")
 
     def cc_paths():
@@ -461,6 +465,87 @@ def main() -> None:
     edges = sparse.unionByName(kernel)
     run("kcore_peel_k5", lambda: k_core(edges, 5).count())
 
+    def selected(name):
+        return only is None or name in only
+
+    # targeted physical delete on an n×1M-row, 7-partition, 32-file
+    # table: 50 keys clustered into few files vs scattered over all of
+    # them — the distributed rewrite keeps a constant job count either
+    # way, and the wall tracks the bytes rewritten
+    from rtdl_spark.operators.merge import delete_by_keys
+
+    def jobs_now():
+        return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+    delete_stats: dict[str, dict] = {}
+    if selected("delete_by_keys"):
+        work = tempfile.mkdtemp(prefix="soak_delete_")
+        base = spark.range(n * 1_000_000).select(
+            F.col("id").alias("row_id"),
+            (F.col("id") % 100_000).alias("user_id"),
+            (F.col("id") % 7).cast("string").alias("p"),
+            (F.col("id") * 13 % 1_000_003).alias("payload"),
+        )
+        targets = spark.createDataFrame(
+            [(i * 997,) for i in range(50)], "user_id long"
+        )
+        try:
+            for label, layout_col in (
+                ("clustered", "user_id"), ("scatter", "row_id"),
+            ):
+                root = os.path.join(work, label)
+                base.repartition(32, layout_col).write.partitionBy(
+                    "p"
+                ).parquet(root)
+                j0, t0 = jobs_now(), time.perf_counter()
+                stats = delete_by_keys(spark, root, targets, "user_id")
+                timings[f"delete_by_keys_{label}"] = round(
+                    time.perf_counter() - t0, 4
+                )
+                delete_stats[label] = {"jobs": jobs_now() - j0, **stats}
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
+
+    # materialized rollup over an n×10M-row Delta source built by 20
+    # appends (SCALE.md's round-5 table size), each writing one file per
+    # task: one incremental refresh after the last append (reads that
+    # batch's added files + the k-row state) vs a fresh view's full
+    # rebuild of the same version (reads every file). The increment also
+    # pays fixed log replays of both tables, so on a source of few large
+    # files (4 per append) the two measured about even at 10M rows.
+    from rtdl_spark.operators.matview import MaterializedAggView
+    from rtdl_spark.sources.delta_writer import write_delta_native
+
+    if selected("matview_refresh"):
+        work = tempfile.mkdtemp(prefix="soak_matview_")
+        versions = 20
+        batch = spark.range(n * 10_000_000 // versions).select(
+            (F.col("id") % 1000).alias("k"),
+            (F.col("id") % 97).cast("double").alias("amount"),
+        )
+        src = os.path.join(work, "fact")
+
+        def view(name):
+            return MaterializedAggView(
+                spark, src, os.path.join(work, name), ["k"],
+                {"total": "amount"},
+            )
+
+        try:
+            for _ in range(versions - 1):
+                write_delta_native(spark, batch, src)
+            mv = view("mv")
+            mv.refresh()
+            write_delta_native(spark, batch, src)
+            for label, v in (("incremental", mv), ("rebuild", view("mv2"))):
+                t0 = time.perf_counter()
+                v.refresh()
+                timings[f"matview_refresh_{label}"] = round(
+                    time.perf_counter() - t0, 4
+                )
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
+
     print(
         json.dumps(
             {
@@ -468,6 +553,7 @@ def main() -> None:
                 "value": round(sum(timings.values()), 4),
                 "unit": "sec",
                 "queries": timings,
+                **({"delete_by_keys": delete_stats} if delete_stats else {}),
                 "n_copies": n,
                 "lineitem_rows": lineitem.count(),
                 "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
