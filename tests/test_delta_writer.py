@@ -2745,6 +2745,38 @@ def test_cm_schema_replacing_overwrite(spark, tmp_path, mode):
     assert read_delta_native(spark, root).count() == 8
 
 
+def _rt_dv_table(spark, root, cdf=False):
+    """A row-tracking + deletion-vector table (with the change data
+    feed enabled when ``cdf``): v0 empty, v1 upgrades the protocol, v2
+    appends ids 0..9 as two files with baseRowIds."""
+    write_delta_native(
+        spark, _frame(spark, 0, 0), root, checkpoint_interval=0
+    )
+    _, meta0, _, _, _ = snapshot_actions(spark, root)
+    with open(
+        os.path.join(root, "_delta_log", f"{1:020d}.json"), "w"
+    ) as f:
+        f.write(json.dumps({"commitInfo": {
+            "timestamp": 2, "operation": "UPGRADE"}}) + "\n")
+        f.write(json.dumps({"protocol": {
+            "minReaderVersion": 3, "minWriterVersion": 7,
+            "readerFeatures": ["deletionVectors"],
+            "writerFeatures": ["deletionVectors", "rowTracking",
+                               "domainMetadata", "appendOnly",
+                               "invariants", "changeDataFeed"]}}) + "\n")
+        f.write(json.dumps({"metaData": {
+            **meta0,
+            "configuration": {
+                "delta.enableDeletionVectors": "true",
+                **({"delta.enableChangeDataFeed": "true"} if cdf else {}),
+            },
+        }}) + "\n")
+    return write_delta_native(
+        spark, _frame(spark, 0, 10).coalesce(2), root,
+        checkpoint_interval=0,
+    )
+
+
 def test_row_tracking_dv_dml_preserves_ids(spark, tmp_path):
     """rowTracking x deletion vectors (r8): a DV DELETE re-adds the
     same file with its live baseRowId passed through verbatim
@@ -2757,30 +2789,7 @@ def test_row_tracking_dv_dml_preserves_ids(spark, tmp_path):
     )
 
     root = str(tmp_path / "rtdv")
-    write_delta_native(
-        spark, _frame(spark, 0, 0), root, checkpoint_interval=0
-    )
-    from rtdl_spark.sources.delta_reader import snapshot_actions
-    _, meta0, _, _, _ = snapshot_actions(spark, root)
-    with open(
-        os.path.join(root, "_delta_log", f"{1:020d}.json"), "w"
-    ) as f:
-        f.write(json.dumps({"commitInfo": {
-            "timestamp": 2, "operation": "UPGRADE"}}) + "\n")
-        f.write(json.dumps({"protocol": {
-            "minReaderVersion": 3, "minWriterVersion": 7,
-            "readerFeatures": ["deletionVectors"],
-            "writerFeatures": ["deletionVectors", "rowTracking",
-                               "domainMetadata", "appendOnly",
-                               "invariants"]}}) + "\n")
-        f.write(json.dumps({"metaData": {
-            **meta0,
-            "configuration": {"delta.enableDeletionVectors": "true"},
-        }}) + "\n")
-    write_delta_native(  # ids 0..9
-        spark, _frame(spark, 0, 10).coalesce(2), root,
-        checkpoint_interval=0,
-    )
+    _rt_dv_table(spark, root)  # ids 0..9
     before = _row_ids(spark, root)
 
     res = delete_where_delta_dv(spark, root, "id IN (1, 6)")
@@ -2827,6 +2836,90 @@ def test_row_tracking_dv_dml_preserves_ids(spark, tmp_path):
     )
     got = {r["id"]: r["v"] for r in read_delta_native(spark, root).collect()}
     assert got[4] == 8 + 1000
+
+
+def test_row_tracking_update_with_change_data_feed(spark, tmp_path):
+    """UPDATE WHERE on a row-tracking table with the change data feed:
+    the change rows carry the table columns only (the rewrite carries
+    the materialized row-id columns too), ids survive the rewrite."""
+    from rtdl_spark.sources.delta_reader import read_table_changes_cdf
+    from rtdl_spark.sources.delta_writer import update_where_delta_native
+
+    root = str(tmp_path / "rt_cdf")
+    _rt_dv_table(spark, root, cdf=True)
+    before = _row_ids(spark, root)
+    v = update_where_delta_native(
+        spark, root, "id IN (2, 7)", {"v": "v + 100"}
+    )["version"]
+    got = {r["id"]: r["v"] for r in read_delta_native(spark, root).collect()}
+    assert got == {i: 2 * i + (100 if i in (2, 7) else 0) for i in range(10)}
+    after = _row_ids(spark, root)
+    assert {k: a[0] for k, a in after.items()} == {
+        k: b[0] for k, b in before.items()
+    }
+    assert after[2][1] == after[7][1] == v
+    changes = sorted(
+        (r["_change_type"], r["id"], r["v"])
+        for r in read_table_changes_cdf(spark, root, v, v).collect()
+    )
+    assert changes == [
+        ("update_postimage", 2, 104), ("update_postimage", 7, 114),
+        ("update_preimage", 2, 4), ("update_preimage", 7, 14),
+    ]
+
+
+@pytest.mark.parametrize(
+    "op", ["DELETE", "UPDATE", "DV UPDATE", "MERGE", "OPTIMIZE"]
+)
+def test_row_tracking_rewrite_refuses_unassigned_base_row_id(
+    spark, tmp_path, op
+):
+    """Every rewrite that carries row ids refuses a non-empty file
+    whose add lacks baseRowId (its ids were never assigned), and
+    commits nothing."""
+    from rtdl_spark.sources.delta_writer import (
+        delete_where_delta_native,
+        merge_into_delta_native,
+        update_where_delta_dv,
+        update_where_delta_native,
+    )
+
+    root = str(tmp_path / "rt_unassigned")
+    v = _rt_dv_table(spark, root)
+    path = os.path.join(root, "_delta_log", f"{v:020d}.json")
+    actions = _log_actions(root, v)
+    stripped = 0
+    for a in actions:
+        if "add" in a and not stripped:
+            assert json.loads(a["add"]["stats"])["numRecords"] > 0
+            del a["add"]["baseRowId"]
+            stripped += 1
+    assert stripped == 1
+    with open(path, "w") as f:
+        f.write("".join(json.dumps(a) + "\n" for a in actions))
+    rows = sorted(
+        tuple(r) for r in read_delta_native(spark, root).collect()
+    )
+
+    run = {
+        "DELETE": lambda: delete_where_delta_native(spark, root, "id >= 0"),
+        "UPDATE": lambda: update_where_delta_native(
+            spark, root, "id >= 0", {"v": "v + 1"}
+        ),
+        "DV UPDATE": lambda: update_where_delta_dv(
+            spark, root, "id >= 0", {"v": "v + 1"}
+        ),
+        "MERGE": lambda: merge_into_delta_native(
+            spark, root, _frame(spark, 0, 10), on=["id"]
+        ),
+        "OPTIMIZE": lambda: optimize_delta_native(spark, root),
+    }[op]
+    with pytest.raises(ValueError, match="never assigned"):
+        run()
+    assert max(h["version"] for h in delta_history(spark, root)) == v
+    assert sorted(
+        tuple(r) for r in read_delta_native(spark, root).collect()
+    ) == rows
 
 
 def test_clustered_table_accepted_and_optimize_reclusters(

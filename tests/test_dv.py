@@ -698,10 +698,23 @@ def test_merge_on_dv_table_and_optimize_purge(spark, tmp_path):
         spark, spark.range(20, 25).select("id").coalesce(1), root2,
         checkpoint_interval=0,
     )
+    _, _, before, _, _ = snapshot_actions(spark, root2)
+    assert any(a.get("deletionVector") for a in before.values())
     res = optimize_delta_native(spark, root2, min_files=2)
     assert res["version"] is not None
     _, _, active, _, _ = snapshot_actions(spark, root2)
     assert all(not a.get("deletionVector") for a in active.values())
+    # each OPTIMIZE tombstone of a DV-carrying add keeps that add's
+    # descriptor (reconciliation keys on path + dvId)
+    with open(
+        os.path.join(root2, "_delta_log", f"{res['version']:020d}.json")
+    ) as f:
+        removes = [a["remove"] for a in map(json.loads, f) if "remove" in a]
+    assert sorted(r["path"] for r in removes) == sorted(before)
+    for r in removes:
+        assert r.get("deletionVector") == before[r["path"]].get(
+            "deletionVector"
+        ), r
     got = sorted(r["id"] for r in read_delta_native(spark, root2).collect())
     assert got == [1, 3, 4, 5, 6, 7, 8, 9, 20, 21, 22, 23, 24]
     # the DV file is now unreferenced -> reclaimable

@@ -500,21 +500,144 @@ def test_ensure_runtime_confs_once_per_session(spark):
 
 
 def test_promote_staged_threaded_branch(spark, tmp_path, monkeypatch):
-    """Force the threaded rename pool in _promote_staged (engaged on
-    remote stores with >=16 staged files) and verify the promoted table
-    is byte-identical to the sequential path's result."""
+    """Force the threaded rename pool in the shared file mover (engaged
+    on remote stores with >=16 moves) and verify that a write and an
+    OPTIMIZE through it give the sequential path's result."""
+    import threading
+
     from rtdl_spark.sources import fsutil
     from rtdl_spark.sources.delta_reader import read_delta_native
-    from rtdl_spark.sources.delta_writer import write_delta_native
+    from rtdl_spark.sources.delta_writer import (
+        optimize_delta_native,
+        write_delta_native,
+    )
 
     df = spark.range(200).select(
         F.col("id").alias("k"),
         (F.col("id") % 20).cast("string").alias("p"),
     )
+
+    def rows_of(root):
+        return sorted(
+            (r["k"], r["p"]) for r in read_delta_native(spark, root).collect()
+        )
+
+    def two_appends(root):
+        # several small files in each of the 20 partitions; OPTIMIZE
+        # packs each partition into one file
+        write_delta_native(spark, df, root, partition_by=["p"])
+        write_delta_native(spark, df.withColumn("k", F.col("k") + 1000), root)
+
+    seq_root = str(tmp_path / "sequential")
+    two_appends(seq_root)
+    seq_res = optimize_delta_native(spark, seq_root)
+
+    real_rename = fsutil.rename
+    off_main: list[bool] = []
+
+    def spy_rename(spark_, src, dst):
+        off_main.append(
+            threading.current_thread() is not threading.main_thread()
+        )
+        return real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(fsutil, "rename", spy_rename)
     monkeypatch.setattr(fsutil, "_is_local", lambda _s, _p: False)
     root = str(tmp_path / "threaded")
     write_delta_native(spark, df, root, partition_by=["p"])
-    rows = sorted(
-        (r["k"], r["p"]) for r in read_delta_native(spark, root).collect()
+    assert rows_of(root) == sorted((k, str(k % 20)) for k in range(200))
+    assert off_main and all(off_main), "the write did not move threaded"
+
+    thr_root = str(tmp_path / "threaded_opt")
+    two_appends(thr_root)
+    off_main.clear()
+    thr_res = optimize_delta_native(spark, thr_root)
+    assert len(off_main) == thr_res["files_out"] >= 16
+    assert all(off_main), "OPTIMIZE did not move threaded"
+    assert {k: v for k, v in thr_res.items() if k != "version"} == {
+        k: v for k, v in seq_res.items() if k != "version"
+    }
+    assert rows_of(thr_root) == rows_of(seq_root)
+    assert len(rows_of(thr_root)) == 400
+
+
+@pytest.mark.parametrize("threaded", [False, True])
+@pytest.mark.parametrize("fail_at", ["first", "last"])
+def test_failed_promote_aborts_cleanly(
+    spark, tmp_path, monkeypatch, threaded, fail_at
+):
+    """A rename failing during a DELETE's promote (the first move or
+    the last one, sequential or threaded mover) aborts the DELETE: no
+    version is committed, the rows are unchanged, every file the mover
+    already placed under the root is deleted again, and the staging
+    directory is gone. A retry then succeeds."""
+    import threading
+    import urllib.parse
+
+    from rtdl_spark.sources import fsutil
+    from rtdl_spark.sources.delta_reader import (
+        read_delta_native,
+        snapshot_actions,
     )
-    assert rows == sorted((k, str(k % 20)) for k in range(200))
+    from rtdl_spark.sources.delta_writer import (
+        delete_where_delta_native,
+        write_delta_native,
+    )
+
+    root = str(tmp_path / "tbl")
+    df = spark.range(200).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 20).cast("string").alias("p"),
+    )
+    write_delta_native(spark, df, root, partition_by=["p"])
+    _, _, _, v0, _ = snapshot_actions(spark, root)
+    rows0 = sorted(map(tuple, read_delta_native(spark, root).collect()))
+
+    if threaded:
+        monkeypatch.setattr(fsutil, "_is_local", lambda _s, _p: False)
+    real_rename = fsutil.rename
+    lock = threading.Lock()
+    state = {"calls": 0, "n": None}
+
+    def flaky_rename(spark_, src, dst):
+        with lock:
+            if state["n"] is None:
+                # the staging directory holds exactly the files to move
+                head, _, tail = src.partition("/_delete-")
+                staging = head + "/_delete-" + tail.split("/")[0]
+                state["n"] = sum(
+                    f.endswith(".parquet")
+                    for _d, _s, fs in os.walk(staging) for f in fs
+                )
+            i = state["calls"]
+            state["calls"] += 1
+        if fail_at == "first" and i == 0:
+            return False
+        if fail_at == "last" and i == state["n"] - 1:
+            raise OSError("injected rename failure")
+        return real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(fsutil, "rename", flaky_rename)
+    with pytest.raises(OSError, match="failed to move staged file"):
+        delete_where_delta_native(spark, root, "k % 3 = 0")
+    assert state["n"] >= 16  # enough moves for the threaded branch
+    if fail_at == "last":
+        assert state["calls"] == state["n"]
+
+    _, _, active, v1, _ = snapshot_actions(spark, root)
+    assert v1 == v0
+    assert sorted(map(tuple, read_delta_native(spark, root).collect())) == rows0
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _s, fs in os.walk(root)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    assert on_disk == {urllib.parse.unquote(p) for p in active}
+    assert not [n for n in os.listdir(root) if n.startswith("_delete-")]
+
+    monkeypatch.setattr(fsutil, "rename", real_rename)
+    assert delete_where_delta_native(spark, root, "k % 3 = 0")["version"]
+    assert sorted(
+        map(tuple, read_delta_native(spark, root).collect())
+    ) == [r for r in rows0 if r[0] % 3 != 0]

@@ -68,7 +68,7 @@ def main() -> None:
         import rtdl_spark.sources.delta_writer as W
 
         orig = W._skip_candidates
-        W._skip_candidates = lambda active, meta, cond: active
+        W._skip_candidates = lambda _spark, active, meta, cond: active
         try:
             t0 = time.time()
             read_delta_native(spark, root).filter(where).select(
